@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -9,6 +10,18 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 SF_SMOKE = "/root/testdata/sf0.001"
+
+
+def spark_jobs(spark, action):
+    """Run ``action`` and return its result and the ids of the Spark
+    jobs it started, read from the status tracker through a job group."""
+    sc, group = spark.sparkContext, f"jobs_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "counted action")
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

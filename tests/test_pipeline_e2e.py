@@ -1,5 +1,7 @@
 """Full-pipeline E2E (the reference's main.py flow): two load cycles
-with growing upstream data, idempotency, and the live get_last_price."""
+with growing upstream data, idempotency, and the live get_last_price —
+including a lookup between cycles after every kind of warehouse write,
+which its cached latest-price snapshot must not hide."""
 
 from __future__ import annotations
 
@@ -7,13 +9,17 @@ import datetime as dt
 import uuid
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from utn_dataengineering_stockmarketpipeline_spark import pipeline
 from utn_dataengineering_stockmarketpipeline_spark.operators import warehouse as wh
 
+from conftest import spark_jobs
 
-def make_fetcher(up_to: str):
-    """Fixture API serving a calendar that 'grows' as up_to advances."""
+
+def make_fetcher(up_to: str, listed: tuple[str, ...] = ("AAA", "BBB")):
+    """Fixture API serving a calendar that 'grows' as up_to advances;
+    ``listed`` is the exchange's symbol list (the markets dimension)."""
     d0 = dt.date(2024, 1, 1)
 
     def fetch(kind, entity, from_date):
@@ -22,7 +28,7 @@ def make_fetcher(up_to: str):
                 {"Code": t, "Name": f"Co {t}", "Country": "US",
                  "Exchange": entity, "Currency": "USD",
                  "Type": "Common Stock", "Isin": f"ISIN{t}"}
-                for t in ("AAA", "BBB")
+                for t in listed
             ]
         out = []
         for i in range(60):
@@ -88,6 +94,94 @@ def test_two_cycle_incremental_pipeline(spark, dbs, tmp_path):
     assert r["stock_date_fmt"] == "15-01-2024"
     assert r["market_companyname"] == "Co AAA"
     assert r["market_exchange"] == "NYSE"
+
+
+def _last(spark, ticker, dw):
+    return [r.asDict() for r in pipeline.get_last_price(spark, ticker, dw).collect()]
+
+
+def _dates(spark, ticker, dw):
+    return [r["stock_date_fmt"] for r in _last(spark, ticker, dw)]
+
+
+def _run(spark, dbs, lake_dir, up_to, tickers=("AAA", "BBB"), **kw):
+    stage, dw = dbs
+    return pipeline.run_pipeline(spark, make_fetcher(up_to, **kw), list(tickers),
+                                 ["NYSE"], lake_dir, stage, dw)
+
+
+def test_lookup_between_cycles_sees_every_write(spark, dbs, tmp_path):
+    _, dw = dbs
+    lake_dir = str(tmp_path / "bronze")
+
+    # BBB is not listed yet: its bars have no dimension row
+    _run(spark, dbs, lake_dir, "2024-01-10", listed=("AAA",))
+    assert _dates(spark, "AAA", dw) == ["10-01-2024"]
+    assert _last(spark, "BBB", dw)[0]["market_companyname"] is None
+
+    # a dimension-only change (no new fact rows) is visible
+    report = _run(spark, dbs, lake_dir, "2024-01-10")
+    assert (report.committed["stock_prices"], report.committed["markets"]) == (0, 1)
+    assert _last(spark, "BBB", dw)[0]["market_companyname"] == "Co BBB"
+
+    # a new day committed after a lookup is visible on the next lookup
+    _run(spark, dbs, lake_dir, "2024-01-12")
+    assert _dates(spark, "AAA", dw) == ["12-01-2024"]
+
+    # the global-max-date quirk: BBB has no bar on the latest date
+    report = _run(spark, dbs, lake_dir, "2024-01-13", tickers=("AAA",))
+    assert report.committed["stock_prices"] == 1
+    assert _dates(spark, "AAA", dw) == ["13-01-2024"]
+    assert _last(spark, "BBB", dw) == []
+    assert _last(spark, "ZZZ", dw) == []
+
+    # truncating the fact table empties the answer instead of re-reading
+    # the deleted files
+    wh.truncate_table(spark, dw, "stock_prices")
+    assert _last(spark, "AAA", dw) == []
+
+
+def test_lookup_after_drop_raises_and_recreate_serves_new_rows(spark, dbs, tmp_path):
+    stage, dw = dbs
+    _run(spark, dbs, str(tmp_path / "bronze"), "2024-01-10")
+    assert _dates(spark, "AAA", dw) == ["10-01-2024"]
+
+    def cached():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    n_cached = cached()
+    wh.delete_schemas(spark, stage, dw)
+    with pytest.raises(AnalysisException):
+        _last(spark, "AAA", dw)
+    assert cached() == n_cached - 1  # the dropped rows are released too
+
+    _run(spark, dbs, str(tmp_path / "bronze2"), "2024-01-04")
+    assert _dates(spark, "AAA", dw) == ["04-01-2024"]
+
+
+def test_lookup_survives_clear_cache(spark, dbs, tmp_path):
+    _, dw = dbs
+    _run(spark, dbs, str(tmp_path / "bronze"), "2024-01-10")
+    before = _last(spark, "AAA", dw)
+    spark.catalog.clearCache()
+    assert _last(spark, "AAA", dw) == before
+    _run(spark, dbs, str(tmp_path / "bronze"), "2024-01-11")
+    assert _dates(spark, "AAA", dw) == ["11-01-2024"]
+
+
+def test_two_warehouses_never_share_a_snapshot(spark, dbs, tmp_path):
+    other = tuple(f"{db}_b" for db in dbs)
+    try:
+        _run(spark, dbs, str(tmp_path / "a"), "2024-01-10")
+        _run(spark, other, str(tmp_path / "b"), "2024-01-20")
+        for rnd in range(2):
+            for dw, day in ((dbs[1], "10-01-2024"), (other[1], "20-01-2024")):
+                dates, jobs = spark_jobs(spark, lambda: _dates(spark, "AAA", dw))
+                assert dates == [day]
+                # each keeps its own snapshot: alternating does not rebuild
+                assert rnd == 0 or len(jobs) == 1
+    finally:
+        wh.delete_schemas(spark, *other)
 
 
 def test_corpus_release_end_to_end(spark, tmp_path):

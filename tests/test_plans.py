@@ -10,16 +10,21 @@ that no value test would catch.
 from __future__ import annotations
 
 import contextlib
+import datetime as dt
 import io
+import uuid
 
 from pyspark.sql import functions as F
 
+from utn_dataengineering_stockmarketpipeline_spark import pipeline
 from utn_dataengineering_stockmarketpipeline_spark.operators import dedup
+from utn_dataengineering_stockmarketpipeline_spark.operators import warehouse as wh
 from utn_dataengineering_stockmarketpipeline_spark.plans.catalog import CATALOG
+from utn_dataengineering_stockmarketpipeline_spark.schemas import MARKETS, STOCK_PRICES
 from utn_dataengineering_stockmarketpipeline_spark.sources import lake
 from utn_dataengineering_stockmarketpipeline_spark.sources.parquet import load_table
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, spark_jobs
 
 
 def plan_of(df) -> str:
@@ -33,6 +38,40 @@ def test_get_last_price_broadcasts_dimension(spark):
     plan = plan_of(CATALOG["ref_get_last_price"].build(spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_repeated_live_lookup_is_one_job_over_the_cache(spark):
+    """The serving path: once the latest-price snapshot is built, a
+    lookup on an unchanged warehouse reads the cached partition in one
+    Spark job and one task, not a fresh scan, aggregate and joins."""
+    tag = uuid.uuid4().hex[:8]
+    stage, dw = f"plan_stage_{tag}", f"plan_dw_{tag}"
+    wh.create_tables(spark, stage, dw)
+    try:
+        spark.createDataFrame(
+            [(dt.date(2024, 1, d), 1.0, 2.0, 0.5, 1.5 + d, 100, t, 2024, 1, d,
+              f"2024-01-0{d}/{t}") for d in (1, 2) for t in ("AAA", "BBB")],
+            STOCK_PRICES,
+        ).write.insertInto(f"`{dw}`.`stock_prices`")
+        spark.createDataFrame(
+            [("AAA", "Co AAA", "US", "NYSE", "USD", "ISINAAA")], MARKETS
+        ).write.insertInto(f"`{dw}`.`markets`")
+        pipeline.get_last_price(spark, "AAA", dw).collect()  # builds it
+
+        df = pipeline.get_last_price(spark, "BBB", dw)
+        assert "InMemoryTableScan" in plan_of(df)
+        rows, jobs = spark_jobs(spark, df.collect)
+        assert [(r["stock_ticker"], r["stock_close"]) for r in rows] == [("BBB", 3.5)]
+        (job,) = jobs
+        tracker = spark.sparkContext.statusTracker()
+        stages = tracker.getJobInfo(job).stageIds
+        assert sum(tracker.getStageInfo(s).numTasks for s in stages) == 1
+
+        # clearing Spark's cache must not leave lookups on the slow path
+        spark.catalog.clearCache()
+        assert "InMemoryTableScan" in plan_of(pipeline.get_last_price(spark, "BBB", dw))
+    finally:
+        wh.delete_schemas(spark, stage, dw)
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark):

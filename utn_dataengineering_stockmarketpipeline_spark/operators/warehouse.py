@@ -17,7 +17,9 @@ the API is format-agnostic on purpose.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from ..functions.scalar import fmt_ddmmyyyy
 from ..schemas import MARKETS, STOCK_PRICES
 from .scd import new_rows
 
@@ -107,6 +109,24 @@ def commit_to_warehouse(spark: SparkSession, table: str,
     finally:
         fresh.unpersist()
     return n
+
+
+def last_price_rows(latest: DataFrame, dim: DataFrame) -> DataFrame:
+    """J3: ``get_last_price``'s output shape (``DB_manager.py:183-191``) —
+    fact rows left-joined to their ``markets`` row and projected to the
+    six reported columns, the date as ``DD-MM-YYYY``. The dimension is
+    broadcast: Postgres used a PK index, Spark ships the small table to
+    every task instead."""
+    return latest.join(
+        F.broadcast(dim), latest["stock_ticker"] == dim["market_stockid"], "left"
+    ).select(
+        fmt_ddmmyyyy("stock_date").alias("stock_date_fmt"),
+        "stock_ticker",
+        "market_companyname",
+        "stock_close",
+        "market_exchange",
+        "market_stockisin",
+    )
 
 
 def show_preview(df: DataFrame, n: int = 3) -> None:

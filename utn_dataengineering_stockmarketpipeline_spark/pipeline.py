@@ -10,7 +10,9 @@ bronze parquet → stage → SCD-0 warehouse commit; then the
   (sources/state.py) — no ``state.json``;
 - the bronze lake partitions by year/month (not day/ticker, §4.1);
 - stage → warehouse is one left-anti append, not a truncate-and-INSERT
-  loop over a WAN.
+  loop over a WAN;
+- ``get_last_price`` filters a cached latest-price snapshot that is
+  rebuilt only when the warehouse's files change, not a per-lookup scan.
 
 Everything is injected (fetcher, paths, databases) so the same function
 runs in tests against local JSON fixtures and in production against the
@@ -19,12 +21,16 @@ real API — the reference hard-codes all of it.
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .operators import warehouse as wh
 from .operators.transforms import normalize_market_payload, normalize_stock_payload
+from .operators.windows import latest_global_date
 from .sources import lake
 from .sources.rest import Fetcher, fetch_market, fetch_stock
 from .sources.state import SENTINEL_DATE, next_from_date
@@ -100,28 +106,64 @@ def get_last_price(
     spark: SparkSession, ticker: str, warehouse: str = wh.WAREHOUSE
 ) -> DataFrame:
     """The reference's analytical query over the live warehouse
-    (``DB_manager.py:181-199``), global-max-date quirk included."""
-    from pyspark.sql import functions as F
+    (``DB_manager.py:181-199``), global-max-date quirk included: a
+    ticker with no bar on the latest date of the whole fact table gets
+    0 rows.
 
-    from .functions.scalar import fmt_ddmmyyyy
+    Served as a lazy ticker filter over the warehouse's latest-price
+    snapshot (see :func:`_latest_price_snapshot`), so a repeated lookup
+    is one single-task Spark job over a cached partition instead of a
+    fresh scan, aggregate and two joins.
 
-    fact = spark.table(f"`{warehouse}`.`stock_prices`")
-    dim = spark.table(f"`{warehouse}`.`markets`")
-    latest = fact.select(F.max("stock_date").alias("__d"))
-    return (
-        fact.join(F.broadcast(latest), fact.stock_date == F.col("__d"))
-        .filter(F.col("stock_ticker") == ticker)
-        .join(
-            F.broadcast(dim),
-            fact.stock_ticker == dim.market_stockid,
-            "left",
-        )
-        .select(
-            fmt_ddmmyyyy("stock_date").alias("stock_date_fmt"),
-            "stock_ticker",
-            "market_companyname",
-            "stock_close",
-            "market_exchange",
-            "market_stockisin",
-        )
-    )
+    Freshness: a write made through this session (append, overwrite,
+    truncate, drop) is visible on the next lookup. A table written by
+    another process needs ``REFRESH TABLE`` first, as any read of a
+    Spark catalog table does. If a table no longer exists,
+    ``spark.table`` raises.
+    """
+    snapshot = _latest_price_snapshot(spark, warehouse)
+    return snapshot.filter(F.col("stock_ticker") == ticker)
+
+
+# (session, warehouse) -> (file sets of the fact and dim tables, snapshot).
+# Per process because get_last_price's signature is the reference's; the
+# session in the key keeps sessions from sharing a snapshot.
+_SNAPSHOTS: dict[
+    tuple[SparkSession, str], tuple[tuple[frozenset, frozenset], DataFrame]
+] = {}
+_SNAPSHOTS_LOCK = threading.Lock()
+
+
+def _latest_price_snapshot(spark: SparkSession, warehouse: str) -> DataFrame:
+    """Every ticker's ``get_last_price`` row, cached in one partition.
+
+    The snapshot is valid while the fact and dim tables resolve to the
+    same files: Spark names every written file uniquely and re-lists a
+    table after each write made through the session, so an unchanged
+    file set means unchanged rows. Spark's own recaching is not enough:
+    after ``TRUNCATE TABLE`` it re-reads deleted files, and a snapshot
+    kept after ``DROP DATABASE … CASCADE`` would still serve the dropped
+    rows. At millions of files per table the key should become a table
+    format's snapshot id instead of the listing.
+    """
+    key = (spark, warehouse)
+    with _SNAPSHOTS_LOCK:
+        held = _SNAPSHOTS.get(key)
+        try:
+            fact = spark.table(f"`{warehouse}`.`stock_prices`")
+            dim = spark.table(f"`{warehouse}`.`markets`")
+        except AnalysisException:  # dropped: stop caching the dropped rows
+            if held is not None:
+                del _SNAPSHOTS[key]
+                held[1].unpersist()
+            raise
+        files = (frozenset(fact.inputFiles()), frozenset(dim.inputFiles()))
+        if held is not None:
+            held_files, snapshot = held
+            # storageLevel: spark.catalog.clearCache() drops the cache
+            if held_files == files and snapshot.storageLevel.useMemory:
+                return snapshot
+            snapshot.unpersist()
+        snapshot = wh.last_price_rows(latest_global_date(fact), dim).coalesce(1).cache()
+        _SNAPSHOTS[key] = (files, snapshot)
+        return snapshot

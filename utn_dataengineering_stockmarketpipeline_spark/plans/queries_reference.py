@@ -17,6 +17,7 @@ from ..operators.transforms import (
     normalize_market_payload,
     normalize_stock_payload,
 )
+from ..operators.warehouse import last_price_rows
 from ..operators.windows import latest_global_date, latest_per_entity
 from ..sources.parquet import load_table
 from .catalog import register
@@ -33,27 +34,11 @@ def get_last_price(spark: SparkSession, sf_dir: str, ticker: str) -> DataFrame:
 
     Reference semantics preserved exactly: filter to the *global* max
     date (scalar subquery, DB_manager.py:192-195), then the ticker; left
-    join the tiny dim (broadcast — Postgres used a PK index, Spark ships
-    the 5-row table to every task instead).
+    join the tiny dim (broadcast, ``warehouse.last_price_rows``).
     """
     fact = stock_prices(spark, sf_dir)
-    dim = markets(spark, sf_dir)
     latest = latest_global_date(fact).filter(F.col("stock_ticker") == ticker)
-    return (
-        latest.join(
-            F.broadcast(dim),
-            latest["stock_ticker"] == dim["market_stockid"],
-            "left",
-        )
-        .select(
-            fmt_ddmmyyyy("stock_date").alias("stock_date_fmt"),
-            "stock_ticker",
-            "market_companyname",
-            "stock_close",
-            "market_exchange",
-            "market_stockisin",
-        )
-    )
+    return last_price_rows(latest, markets(spark, sf_dir))
 
 
 @register(
