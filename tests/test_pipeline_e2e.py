@@ -184,6 +184,54 @@ def test_two_warehouses_never_share_a_snapshot(spark, dbs, tmp_path):
         wh.delete_schemas(spark, *other)
 
 
+def test_cycle_jobs_do_not_grow_with_tickers(spark, dbs, tmp_path):
+    """A post-load cycle launches the same Spark jobs at 2 and at 6
+    tickers: watermarks, fetch, stage and commit each run once over all
+    tickers, not once per ticker."""
+    jobs = {}
+    for n in (2, 6):
+        tickers = tuple(f"T{i}" for i in range(n))
+        pair = tuple(f"{db}_{n}" for db in dbs)
+        lake_dir = str(tmp_path / f"bronze{n}")
+        try:
+            _run(spark, pair, lake_dir, "2024-01-10", tickers, listed=tickers)
+            report, ids = spark_jobs(spark, lambda: _run(
+                spark, pair, lake_dir, "2024-01-11", tickers, listed=tickers))
+            assert report.committed == {"markets": 0, "stock_prices": n}
+            jobs[n] = len(ids)
+        finally:
+            wh.delete_schemas(spark, *pair)
+    assert jobs[2] == jobs[6]
+
+
+def test_replayed_cycle_commits_nothing_and_adds_no_file(spark, dbs, tmp_path):
+    """A cycle whose upstream only re-serves loaded days stages them,
+    commits none and leaves both warehouse tables' files untouched."""
+    stage, dw = dbs
+    lake_dir = str(tmp_path / "bronze")
+    _run(spark, dbs, lake_dir, "2024-01-10")
+    assert _dates(spark, "AAA", dw) == ["10-01-2024"]
+
+    def files():
+        return [sorted(spark.table(f"{dw}.{t}").inputFiles())
+                for t in ("stock_prices", "markets")]
+
+    before = files()
+    upstream = make_fetcher("2024-01-10")
+
+    def replaying(kind, entity, from_date):  # re-serves every loaded day
+        return upstream(kind, entity, "2024-01-01")
+
+    report = pipeline.run_pipeline(spark, replaying, ["AAA", "BBB"], ["NYSE"],
+                                   lake_dir, stage, dw)
+    assert report.staged == {"markets": 2, "stock_prices": 20}
+    assert report.committed == {"markets": 0, "stock_prices": 0}
+    assert files() == before
+    # an unchanged file set keeps the latest-price snapshot: one job
+    dates, jobs = spark_jobs(spark, lambda: _dates(spark, "AAA", dw))
+    assert (dates, len(jobs)) == (["10-01-2024"], 1)
+
+
 def test_corpus_release_end_to_end(spark, tmp_path):
     """The LLM-corpus release flow, end to end on real files: curated
     catalog query -> seeded-shuffle shard export -> atomic snapshot

@@ -1,5 +1,4 @@
-"""REST source error discrimination (E1) and the distributed
-``fetch_many`` fan-out (S1 scale path)."""
+"""REST source error discrimination (E1)."""
 
 from __future__ import annotations
 
@@ -7,8 +6,8 @@ import pytest
 
 from utn_dataengineering_stockmarketpipeline_spark.sources.rest import (
     ApiError,
-    fetch_many,
     fetch_stock,
+    fetch_stocks,
 )
 
 
@@ -38,21 +37,12 @@ def test_null_payload_is_empty_not_error(spark):
     assert "close" in df.columns  # schema intact for downstream union
 
 
-def test_fetch_many_distributes_and_tags(spark):
-    """mapInPandas fan-out: every ticker's rows arrive tagged; the
-    fetcher runs on executors. Defined as a closure so cloudpickle
-    ships it BY VALUE — a test-module-level function would need the
-    test file importable on executors."""
-
-    def exec_fetcher(kind, entity, from_date):
-        return [
-            {"date": "2024-01-01", "open": 1.0, "high": 2.0, "low": 0.5,
-             "close": 1.5, "adjusted_close": 1.4, "volume": 10}
-        ]
-
-    work = [("AAA", "1990-01-01"), ("BBB", "1990-01-01"), ("CCC", "1990-01-01")]
-    df = fetch_many(spark, exec_fetcher, work)
+def test_fetch_stocks_tags_one_frame_and_checks_every_payload(spark):
+    df, n = fetch_stocks(spark, error_fetcher,
+                         {"AAA": "1990-01-01", "EMPTY": "1990-01-01", "BBB": "1990-01-01"})
     rows = df.collect()
-    assert sorted({r["ticker"] for r in rows}) == ["AAA", "BBB", "CCC"]
-    assert all(r["close"] == 1.5 for r in rows)
-    assert len(rows) == 3
+    assert n == len(rows) == 2
+    assert sorted(r["ticker"] for r in rows) == ["AAA", "BBB"]
+    assert all(r["close"] == 1.5 and r["warning"] is None for r in rows)
+    with pytest.raises(ApiError, match="Ticker Not Found"):
+        fetch_stocks(spark, error_fetcher, {"AAA": "1990-01-01", "GHOST": "1990-01-01"})

@@ -8,30 +8,26 @@ cannot anti-join against a remote table; Spark expresses the whole merge
 as one ``left_anti`` join — the canonical idempotent / exactly-once-sink
 building block (re-delivered rows vanish in the anti-join).
 
-Scale notes: the incoming batch is usually tiny next to the target, but
-the JOIN must still scan the target's keys. Partition-prune the target
-first (``prune`` predicate — e.g. only recent year/month partitions can
-contain colliding keys when keys embed the date), and let AQE pick
-broadcast when the pruned side is small.
+Scale note: the incoming batch is usually tiny next to the target, but
+the JOIN must still scan the target's keys; AQE broadcasts the target's
+key column while it is small.
 """
 
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 
-def new_rows(incoming: DataFrame, target: DataFrame, key: str,
-             prune: Column | None = None) -> DataFrame:
+def new_rows(incoming: DataFrame, target: DataFrame, key: str) -> DataFrame:
     """Rows of ``incoming`` whose ``key`` does not exist in ``target``.
 
     Mirrors DB_manager.py:152-155 (markets / J1) and :172-176
     (stock_prices / J2). Duplicate keys *within* the batch are collapsed
     first so a single load is idempotent in itself.
     """
-    pruned = target.filter(prune) if prune is not None else target
     return incoming.dropDuplicates([key]).join(
-        pruned.select(key), on=key, how="left_anti"
+        target.select(key), on=key, how="left_anti"
     )
 
 
@@ -192,10 +188,8 @@ def scd1_apply(incoming: DataFrame, current: DataFrame, key: str) -> DataFrame:
     collapsed first (last-writer-ambiguity removed the same way
     ``new_rows`` does).
 
-    At 100 TB: the anti-join benefits from the same partition-pruning
-    advice as ``new_rows`` — prune ``current`` to partitions that can
-    contain incoming keys before the join, and AQE broadcasts the batch
-    side when it is small.
+    At 100 TB: AQE broadcasts the batch side of the anti-join when it is
+    small.
     """
     survivors = current.join(
         incoming.select(key), on=key, how="left_anti"

@@ -16,7 +16,7 @@ the API is format-agnostic on purpose.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import fmt_ddmmyyyy
@@ -74,16 +74,24 @@ def make_query(spark: SparkSession, query: str) -> DataFrame:
     return spark.sql(query)
 
 
+def _insert_counted(df: DataFrame, table: str, mode: str) -> int:
+    """Insert ``df`` into ``table`` by position and return the rows
+    written, counted by the write job itself through an ``Observation``
+    instead of a second scan."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode).insertInto(table)
+    return obs.get["rows"]
+
+
 def save_to_stage(spark: SparkSession, table: str, df: DataFrame,
                   stage: str = STAGE) -> int:
     """K3: truncate-and-reload the stage table
     (``save_to_stage`` DB_manager.py:107-136). One INSERT OVERWRITE —
     atomic per partition set, no row-oriented INSERT loop — returns the
-    row count the reference prints (:109)."""
+    row count the reference prints (:109), observed on the write."""
     schema, _ = _TABLES[table]
     aligned = df.select(*[c.name for c in schema.fields])
-    aligned.write.mode("overwrite").insertInto(f"`{stage}`.`{table}`")
-    return spark.table(f"`{stage}`.`{table}`").count()
+    return _insert_counted(aligned, f"`{stage}`.`{table}`", "overwrite")
 
 
 def commit_to_warehouse(spark: SparkSession, table: str,
@@ -91,24 +99,22 @@ def commit_to_warehouse(spark: SparkSession, table: str,
                         warehouse: str = WAREHOUSE) -> int:
     """J1/J2: SCD-0 commit — append stage rows whose key is absent from
     the warehouse (``commit_to_warehouse`` DB_manager.py:140-179, the
-    LEFT JOIN … IS NULL anti-join). Returns rows inserted (:179)."""
+    LEFT JOIN … IS NULL anti-join). Returns rows inserted (:179).
+
+    A commit with nothing new writes no file: an empty append would
+    still leave an empty parquet file, and a changed file set also
+    invalidates the latest-price snapshot (pipeline.py). Otherwise the
+    count comes from the append itself, so it is exactly what was
+    written; nothing is cached between the check and the append."""
     schema, key = _TABLES[table]
     stg = spark.table(f"`{stage}`.`{table}`")
     tgt = spark.table(f"`{warehouse}`.`{table}`")
     # re-align: the USING-key anti-join moves the key column first and
     # insertInto maps by POSITION, not name.
-    # persist: count + append must see the SAME anti-join result (a lazy
-    # plan would re-run it against the table we just appended to)
-    fresh = (
-        new_rows(stg, tgt, key).select(*[c.name for c in schema.fields]).persist()
-    )
-    try:
-        n = fresh.count()
-        if n:
-            fresh.write.mode("append").insertInto(f"`{warehouse}`.`{table}`")
-    finally:
-        fresh.unpersist()
-    return n
+    fresh = new_rows(stg, tgt, key).select(*[c.name for c in schema.fields])
+    if fresh.isEmpty():
+        return 0
+    return _insert_counted(fresh, f"`{warehouse}`.`{table}`", "append")
 
 
 def last_price_rows(latest: DataFrame, dim: DataFrame) -> DataFrame:

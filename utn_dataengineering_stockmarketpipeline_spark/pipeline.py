@@ -6,6 +6,11 @@ dimension; for each ticker, incremental EOD pull from the saved state →
 bronze parquet → stage → SCD-0 warehouse commit; then the
 ``get_last_price`` query. Spark-native differences:
 
+- a cycle is planned over all keys at once, not per ticker: one
+  watermark aggregate, one fetch frame per phase, counts taken from the
+  fetched rows and from the writes themselves. So a cycle runs a fixed
+  budget of Spark jobs whatever the ticker count: 12, or 9 when nothing
+  is new (tests/test_pipeline_e2e.py pins that it does not grow);
 - the incremental bound derives from the warehouse itself
   (sources/state.py) — no ``state.json``;
 - the bronze lake partitions by year/month (not day/ticker, §4.1);
@@ -32,8 +37,8 @@ from .operators import warehouse as wh
 from .operators.transforms import normalize_market_payload, normalize_stock_payload
 from .operators.windows import latest_global_date
 from .sources import lake
-from .sources.rest import Fetcher, fetch_market, fetch_stock
-from .sources.state import SENTINEL_DATE, next_from_date
+from .sources.rest import Fetcher, fetch_markets, fetch_stocks
+from .sources.state import next_from_dates
 
 
 @dataclass
@@ -56,49 +61,38 @@ def run_pipeline(
 ) -> PipelineReport:
     """One full load cycle: dims (full refresh) + facts (incremental).
 
-    Idempotent end to end: re-running with the same upstream data
-    commits zero new rows (SCD-0 absorbs every replay).
+    The warehouse commit is exactly-once: re-running with the same
+    upstream data commits zero new rows (SCD-0 absorbs every replay).
+    The bronze lake is at-least-once: it appends every fetched row,
+    re-served days included.
     """
     report = PipelineReport()
     wh.create_tables(spark, stage, warehouse)
 
-    # --- dimension: full snapshot per exchange (T4, main.py:22-23) ---
-    markets_batches = [
-        normalize_market_payload(fetch_market(spark, fetcher, ex))
-        for ex in exchanges
-    ]
-    dim = markets_batches[0]
-    for extra in markets_batches[1:]:
-        dim = dim.unionByName(extra)
-    report.fetched["markets"] = dim.count()
-    report.staged["markets"] = wh.save_to_stage(spark, "markets", dim, stage)
+    # --- dimension: full snapshot of every exchange (T4, main.py:22-23) ---
+    dim = normalize_market_payload(fetch_markets(spark, fetcher, exchanges))
+    # the stage holds exactly the fetched snapshot: its write count is both
+    report.fetched["markets"] = report.staged["markets"] = wh.save_to_stage(
+        spark, "markets", dim, stage
+    )
     report.committed["markets"] = wh.commit_to_warehouse(
         spark, "markets", stage, warehouse
     )
 
-    # --- fact: incremental per ticker (T1, main.py:14-16) ---
+    # --- fact: incremental for every ticker (T1, main.py:14-16) ---
     fact_table = spark.table(f"`{warehouse}`.`stock_prices`")
-    batches: list[DataFrame] = []
-    for ticker in tickers:
-        frm = next_from_date(fact_table, ticker)
-        raw = fetch_stock(spark, fetcher, ticker, frm)
-        batches.append(normalize_stock_payload(raw, ticker))
-    incoming = batches[0]
-    for extra in batches[1:]:
-        incoming = incoming.unionByName(extra)
-    incoming = incoming.persist()
-    try:
-        report.fetched["stock_prices"] = incoming.count()
-        if report.fetched["stock_prices"]:
-            lake.write_stocks(incoming, lake_dir)  # bronze first (K1)
-        report.staged["stock_prices"] = wh.save_to_stage(
-            spark, "stock_prices", incoming, stage
-        )
-        report.committed["stock_prices"] = wh.commit_to_warehouse(
-            spark, "stock_prices", stage, warehouse
-        )
-    finally:
-        incoming.unpersist()
+    raw, report.fetched["stock_prices"] = fetch_stocks(
+        spark, fetcher, next_from_dates(fact_table, tickers)
+    )
+    incoming = normalize_stock_payload(raw, F.col("ticker"))
+    if report.fetched["stock_prices"]:
+        lake.write_stocks(incoming, lake_dir)  # bronze first (K1)
+    report.staged["stock_prices"] = wh.save_to_stage(
+        spark, "stock_prices", incoming, stage
+    )
+    report.committed["stock_prices"] = wh.commit_to_warehouse(
+        spark, "stock_prices", stage, warehouse
+    )
     return report
 
 

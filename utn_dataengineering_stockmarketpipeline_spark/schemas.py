@@ -63,6 +63,9 @@ STOCK_RAW = T.StructType(
     ]
 )
 
+# Many tickers' eod rows in one frame, each tagged with its ticker.
+STOCK_TAGGED = T.StructType([T.StructField("ticker", T.StringType()), *STOCK_RAW.fields])
+
 # exchange-symbol-list/{EXCHANGE} JSON rows (API_manager.py:185-197).
 MARKET_RAW = T.StructType(
     [

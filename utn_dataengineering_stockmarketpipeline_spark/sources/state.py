@@ -13,6 +13,8 @@ data), and is a cheap aggregate that partition-prunes at scale.
 
 from __future__ import annotations
 
+import datetime as dt
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,19 +37,26 @@ def watermarks(sink: DataFrame, entity_col: str = "stock_ticker",
     )
 
 
+def next_from_dates(sink: DataFrame, entities: list[str],
+                    entity_col: str = "stock_ticker",
+                    date_col: str = "stock_date") -> dict[str, str]:
+    """``from`` bound of every entity's next incremental pull, from ONE
+    :func:`watermarks` aggregate: watermark + 1 day (API_manager.py:125),
+    or the missing-entity sentinel (API_manager.py:91)."""
+    marks = dict(
+        watermarks(sink.filter(F.col(entity_col).isin(entities)),
+                   entity_col, date_col).collect()
+    )
+    return {
+        e: SENTINEL_DATE if marks.get(e) is None
+        else (marks[e] + dt.timedelta(days=1)).isoformat()
+        for e in entities
+    }
+
+
 def next_from_date(sink: DataFrame, ticker: str,
                    entity_col: str = "stock_ticker",
                    date_col: str = "stock_date") -> str:
-    """``from`` bound for the next incremental pull: watermark + 1 day.
-
-    Mirrors API_manager.py:125 (state + 1 day) with the missing-entity
-    sentinel of API_manager.py:91.
-    """
-    row = (
-        sink.filter(F.col(entity_col) == ticker)
-        .agg(F.date_add(F.max(F.col(date_col)), 1).alias("next_date"))
-        .first()
-    )
-    if row is None or row["next_date"] is None:
-        return SENTINEL_DATE
-    return row["next_date"].isoformat()
+    """``from`` bound for one ticker's next incremental pull
+    (:func:`next_from_dates` of one entity)."""
+    return next_from_dates(sink, [ticker], entity_col, date_col)[ticker]
